@@ -28,9 +28,12 @@ Feature hashing reuses the portable md5-prefix bucket
 
 from __future__ import annotations
 
+from contextlib import ExitStack
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..scoped import scoped_copy
 from .rank import _gram_bucket
 from .text import tokens
 
@@ -87,16 +90,22 @@ def train_linear_classifier(
     magnitude, so feature weights want a step size 100-1000x larger
     than the intercept's O(1) gradient — sharing one rate makes the
     intercept oscillate (diverge) long before features move.
-    """
-    from pyspark import StorageLevel
 
+    The label count, the feature pass and every iteration's residual
+    read one ``scoped_copy`` of the (id, text, label) projection of
+    ``docs``, so an expensive upstream plan runs once for the whole
+    training loop.
+    """
     spark = docs.sparkSession
-    feats = hashed_features(docs, text_col, id_col, m_buckets).persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-    base = docs.select(F.col(id_col), label.cast("double").alias("y"))
-    n_docs = base.count()
-    try:
+    with ExitStack() as held:
+        src = held.enter_context(scoped_copy(
+            docs, F.col(id_col), F.col(text_col), label.cast("double").alias("__y")
+        ))
+        feats = held.enter_context(
+            scoped_copy(hashed_features(src, text_col, id_col, m_buckets))
+        )
+        base = src.select(F.col(id_col), F.col("__y").alias("y"))
+        n_docs = base.count()
         w: dict[int, float] = {
             int(r.bucket): 0.0
             for r in feats.select("bucket").distinct().collect()  # ≤ m_buckets rows
@@ -147,8 +156,6 @@ def train_linear_classifier(
         return spark.createDataFrame(
             [(-1, b0)] + sorted(w.items()), "bucket int, w double"
         )
-    finally:
-        feats.unpersist()
 
 
 def score_with_classifier(

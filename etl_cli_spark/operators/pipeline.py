@@ -27,6 +27,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..fanout import fan_out_for_compute
+from ..scoped import scoped_copy
 
 from .text import token_count
 
@@ -1410,45 +1411,58 @@ def write_training_shards(
     re-running on the same corpus reproduces byte-identical shard
     membership, the property checkpoint-resume depends on.
 
+    One pass over the input: the writer runs three actions (the range
+    partitioner's bounds sample, the write, the per-shard stats), and
+    all three read one ``scoped_copy`` of the columns it reads — id, the
+    kept columns and the text (or token) column. The stats are n_shards
+    rows aggregated from that copy, never data. The index is replaced
+    atomically (temp file + ``os.replace``), so a crash mid-write leaves
+    the previous index readable.
+
     Scale: shard assignment + pack cumsum is pack_sequences (one
     shuffle on the shard key, per-shard windows); the write is one
-    hive-partitioned pass; the index is ONE extra aggregate over
-    (shard, tokens) — n_shards rows to the driver, never data. At
-    100 TB, size n_shards to the cluster (thousands), not 16.
+    hive-partitioned pass. The trade is one local spill of the columns
+    the writer reads (MEMORY_AND_DISK) against re-running every
+    upstream shuffle — a curated corpus's dedup and tokenize plan —
+    once per action. At 100 TB, size n_shards to the cluster
+    (thousands), not 16.
     """
     import json
     import os
+    import tempfile
 
-    packed = pack_sequences(
-        df, id_col=id_col, text_col=text_col, budget=budget,
-        n_shards=n_shards, token_col=token_col,
-    ).select(id_col, "shard", "n_tokens", "pack_id")
     keep = columns or [c for c in df.columns if c != id_col]
-    out = df.select(id_col, *keep).join(packed, id_col)
-    # Range-partition on (shard, pack_id) rather than hash(shard) into
-    # exactly n_shards slots: a hash collision between two shard values
-    # would co-locate both in one task and idle another, and hash
-    # partitioning caps sort+write parallelism at the number of DISTINCT
-    # hashes, not n_shards. Range boundaries spread the keyspace evenly
-    # across tasks; partitionBy("shard") below still lays each shard out
-    # in its own directory, and membership/order stay a pure function of
-    # the packing, so the on-disk contract is unchanged.
-    (
-        out.repartitionByRange(n_shards, F.col("shard"), F.col("pack_id"))
-        .sortWithinPartitions("shard", "pack_id", id_col)
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(os.path.join(path, "data"))
-    )
-    stats = (
-        packed.groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("docs"),
-            F.sum("n_tokens").alias("tokens"),
-            (F.max("pack_id") + 1).alias("packs"),
+    read = dict.fromkeys([id_col, *keep, token_col or text_col])
+    with scoped_copy(df, *read) as src:
+        packed = pack_sequences(
+            src, id_col=id_col, text_col=text_col, budget=budget,
+            n_shards=n_shards, token_col=token_col,
+        ).select(id_col, "shard", "n_tokens", "pack_id")
+        out = src.select(id_col, *keep).join(packed, id_col)
+        # Range-partition on (shard, pack_id) rather than hash(shard) into
+        # exactly n_shards slots: a hash collision between two shard values
+        # would co-locate both in one task and idle another, and hash
+        # partitioning caps sort+write parallelism at the number of DISTINCT
+        # hashes, not n_shards. Range boundaries spread the keyspace evenly
+        # across tasks; partitionBy("shard") below still lays each shard out
+        # in its own directory, and membership/order stay a pure function of
+        # the packing, so the on-disk contract is unchanged.
+        (
+            out.repartitionByRange(n_shards, F.col("shard"), F.col("pack_id"))
+            .sortWithinPartitions("shard", "pack_id", id_col)
+            .write.mode("overwrite")
+            .partitionBy("shard")
+            .parquet(os.path.join(path, "data"))
         )
-        .collect()  # n_shards rows
-    )
+        stats = (
+            packed.groupBy("shard")
+            .agg(
+                F.count(F.lit(1)).alias("docs"),
+                F.sum("n_tokens").alias("tokens"),
+                (F.max("pack_id") + 1).alias("packs"),
+            )
+            .collect()  # n_shards rows
+        )
     index = {
         "budget": budget,
         "n_shards": n_shards,
@@ -1460,8 +1474,14 @@ def write_training_shards(
             for r in stats
         },
     }
-    with open(os.path.join(path, "_shards.json"), "w") as f:
-        json.dump(index, f, sort_keys=True)
+    fd, tmp = tempfile.mkstemp(prefix="._shards.", suffix=".json", dir=path)
+    try:
+        with os.fdopen(fd, "w") as f:
+            json.dump(index, f, sort_keys=True)
+        os.replace(tmp, os.path.join(path, "_shards.json"))
+    except BaseException:
+        os.unlink(tmp)
+        raise
     return index
 
 

@@ -17,11 +17,13 @@ Embedding near-dup (cosine >= threshold pairs) reuses the same buckets.
 from __future__ import annotations
 
 import math
+from contextlib import ExitStack
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..scoped import scoped_copy
 from .text import let
 
 
@@ -433,22 +435,17 @@ def kmeans_refine(
     # persisting BEFORE the init collect lets that first job fill the
     # cache. Released before returning, and the RETURNED final
     # assignment reads the original ``df`` so no cached plan escapes.
-    from pyspark import StorageLevel
-
-    train = df.select(id_col, vec_col)
-    if iters > 0:
-        train = train.persist(StorageLevel.MEMORY_AND_DISK)
-    # try/finally (round-15 ADVICE): an exception anywhere in the init
-    # collect or the Lloyd loop (an _assign_cells failure, a collect
-    # error) must not leak the MEMORY_AND_DISK cached relation for the
-    # session lifetime — every exit path releases it exactly once.
-    try:
+    if iters == 0:  # the init collect is the only action
+        return _kmeans_refine_loop(
+            df, df.select(id_col, vec_col), n_centroids, iters, id_col,
+            vec_col, mean_strategy,
+        )
+    # scoped_copy releases the copy on every exit path (round-15 ADVICE:
+    # a failing collect or assign pass must not leak it)
+    with scoped_copy(df, id_col, vec_col) as train:
         return _kmeans_refine_loop(
             df, train, n_centroids, iters, id_col, vec_col, mean_strategy
         )
-    finally:
-        if iters > 0:
-            train.unpersist()
 
 
 def _kmeans_refine_loop(
@@ -462,7 +459,7 @@ def _kmeans_refine_loop(
 ) -> tuple[DataFrame, list[list[float]]]:
     """The Lloyd iteration body of :func:`kmeans_refine` — split out so
     the caller can own the persisted ``train``'s lifecycle with one
-    try/finally instead of per-exit-path unpersists."""
+    ``with`` block instead of per-exit-path unpersists."""
     init_rows = train.orderBy(id_col).limit(n_centroids).collect()
     if not init_rows:
         raise ValueError("kmeans_refine: empty input")
@@ -927,6 +924,14 @@ def semantic_dedup(
     UDF); the only shuffle is the equi-join on ``__cell``. Returns the
     kept rows of ``df`` plus their ``__cell`` assignment.
 
+    One pass over the input: the sample (or refinement) collects, the
+    cell assignment and the pair kernel all read one ``scoped_copy`` of
+    the ``(id, vec)`` projection, so an expensive upstream plan runs
+    once, not once per action. The drop set is materialized (eager
+    ``localCheckpoint``, ids only) before that copy is released, so the
+    returned plan re-reads ``df`` once and references no cached
+    relation of this call.
+
     ``pair_strategy`` (round-11, VERDICT r10 variance adjudication):
     ``'column'`` = the per-pair ``zip_with`` dot; ``'arrow'`` = one
     ``applyInPandas`` kernel per cell that accumulates the pairwise
@@ -973,73 +978,96 @@ def semantic_dedup(
     (32768 rows x dim 768 x 8 B ~ 200 MB; size it to the executor
     task budget for wider embeddings).
     """
-    from pyspark import StorageLevel
+    drops, cent = _semantic_drops(
+        df, id_col, vec_col, n_clusters, threshold, sample_size,
+        refine_iters, pair_strategy, max_arrow_cell_rows,
+    )
+    return _assign_cells(df, cent, vec_col).join(drops, on=id_col, how="left_anti")
 
+
+def _semantic_drops(
+    df: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    n_clusters: int = 16,
+    threshold: float = 0.97,
+    sample_size: int = 2048,
+    refine_iters: int = 0,
+    pair_strategy: str = "auto",
+    max_arrow_cell_rows: int = 32768,
+) -> tuple[DataFrame, list[list[float]]]:
+    """The drop set of :func:`semantic_dedup` — ``(ids, centroids)``:
+    a checkpointed single-column frame of the ``id_col`` values to drop,
+    and the centroids that placed the cells. A caller that does not
+    need ``__cell`` anti-joins the ids onto its own frame and skips the
+    full-row assignment pass."""
     if pair_strategy not in ("auto", "column", "arrow"):
         raise ValueError(f"semantic_dedup: unknown pair_strategy {pair_strategy!r}")
 
-    # refine_iters > 0 (round-10): place the cells with kmeans_refine —
-    # the same deterministic protocol Lloyd-iterated over the FULL
-    # corpus instead of the driver sample. At web scale (the paper's
-    # ~100k clusters) the sample path cannot even fill the cells;
-    # refinement also tightens them, which only helps the recall of
-    # the within-cluster prune. The kept-set policy is unchanged and
-    # the default (0) keeps the oracle-replayed sample protocol.
-    if refine_iters:
-        with_cells, _cent = kmeans_refine(
-            df, n_centroids=n_clusters, iters=refine_iters,
-            id_col=id_col, vec_col=vec_col,
-        )
-    else:
-        with_cells, _cent = ivf_index(
-            df, id_col=id_col, vec_col=vec_col,
-            n_centroids=n_clusters, sample_size=sample_size,
-        )
-    # normalize ONCE and persist (cell, id, unit vector): the self-join's
-    # two branches would otherwise each re-run the Arrow assign pass, and
-    # per-pair cosine would recompute both norms — unit vectors make the
-    # verify a pure dot (same round-6 protocol embedding_neardup uses).
-    # transform() divides by the norm column directly (r7) — the old
-    # zip_with/array_repeat(dim) form needed a first() action just to
-    # learn the dimension
-    base = (
-        with_cells.select(
-            F.col("__cell"),
-            F.col(id_col).alias("__id"),
-            _as_double(F.col(vec_col)).alias("__v"),
-        )
-        .withColumn("__n", norm(F.col("__v")))
-        .select(
-            "__cell",
-            "__id",
-            F.transform("__v", lambda x: x / F.col("__n")).alias("__u"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    def _column_pairs(frame: DataFrame) -> DataFrame:
-        a = frame.select("__cell", F.col("__id").alias("__a_id"), F.col("__u").alias("__a_u"))
-        b = frame.select("__cell", F.col("__id").alias("__b_id"), F.col("__u").alias("__b_u"))
-        return (
-            a.join(b, on="__cell")
-            .filter(F.col("__a_id") < F.col("__b_id"))
+    # the sample (or refinement) collects and the pair kernel are
+    # separate actions: all of them read one (id, vec) copy, released
+    # with the kernel's output once drops has materialized
+    with ExitStack() as held:
+        src = held.enter_context(scoped_copy(df, id_col, vec_col))
+        # refine_iters > 0 (round-10): place the cells with kmeans_refine —
+        # the same deterministic protocol Lloyd-iterated over the FULL
+        # corpus instead of the driver sample. At web scale (the paper's
+        # ~100k clusters) the sample path cannot even fill the cells;
+        # refinement also tightens them, which only helps the recall of
+        # the within-cluster prune. The kept-set policy is unchanged and
+        # the default (0) keeps the oracle-replayed sample protocol.
+        if refine_iters:
+            with_cells, cent = kmeans_refine(
+                src, n_centroids=n_clusters, iters=refine_iters,
+                id_col=id_col, vec_col=vec_col,
+            )
+        else:
+            with_cells, cent = ivf_index(
+                src, id_col=id_col, vec_col=vec_col,
+                n_centroids=n_clusters, sample_size=sample_size,
+            )
+        # normalize ONCE (cell, id, unit vector): per-pair cosine would
+        # otherwise recompute both norms — unit vectors make the verify
+        # a pure dot (same round-6 protocol embedding_neardup uses).
+        # transform() divides by the norm column directly (r7) — the old
+        # zip_with/array_repeat(dim) form needed a first() action just
+        # to learn the dimension. Not persisted: it is one Arrow assign
+        # pass over the cached projection
+        base = (
+            with_cells.select(
+                F.col("__cell"),
+                F.col(id_col).alias("__id"),
+                _as_double(F.col(vec_col)).alias("__v"),
+            )
+            .withColumn("__n", norm(F.col("__v")))
             .select(
-                F.col("__b_id"),
-                dot(F.col("__a_u"), F.col("__b_u")).alias("__dot"),
+                "__cell",
+                "__id",
+                F.transform("__v", lambda x: x / F.col("__n")).alias("__u"),
             )
         )
 
-    margin = float(threshold) - 1e-6
-    aux: list[DataFrame] = []  # released once drops has materialized
-    try:
+        def _column_pairs(frame: DataFrame) -> DataFrame:
+            a = frame.select("__cell", F.col("__id").alias("__a_id"), F.col("__u").alias("__a_u"))
+            b = frame.select("__cell", F.col("__id").alias("__b_id"), F.col("__u").alias("__b_u"))
+            return (
+                a.join(b, on="__cell")
+                .filter(F.col("__a_id") < F.col("__b_id"))
+                .select(
+                    F.col("__b_id"),
+                    dot(F.col("__a_u"), F.col("__b_u")).alias("__dot"),
+                )
+            )
+
+        margin = float(threshold) - 1e-6
         if pair_strategy == "arrow":
             cand = _cell_pair_candidates(base, margin).drop("__is_cell")
         elif pair_strategy == "column":
             cand = _column_pairs(base)
         else:  # auto: arrow kernel, mega-cells streamed through column
-            raw = _cell_pair_candidates(
+            raw = held.enter_context(scoped_copy(_cell_pair_candidates(
                 base, margin, big_cell_rows=max_arrow_cell_rows
-            ).persist(StorageLevel.MEMORY_AND_DISK)
-            aux.append(raw)
+            )))
             # sentinel rows (``__is_cell`` true, cell id in the dot
             # slot — a dedicated flag, so a genuine pair row whose
             # b-side id is null can never be mistaken for one) mark the
@@ -1064,14 +1092,10 @@ def semantic_dedup(
             .select(F.col("__b_id").alias(id_col))
             .distinct()
             # narrow (ids only): materialize so the returned plan doesn't
-            # depend on the persisted frame after we release it
+            # depend on the persisted frames after we release them
             .localCheckpoint(eager=True)
         )
-    finally:
-        base.unpersist()
-        for f in aux:
-            f.unpersist()
-    return with_cells.join(drops, on=id_col, how="left_anti")
+    return drops, cent
 
 
 def semantic_cross_dedup(

@@ -18,10 +18,28 @@ script:
     ]
     out = run_corpus_pipeline(docs, stages)
 
-Every stage maps onto an already-verified operator; no stage triggers a
-job by itself (lazy composition), so Catalyst optimizes ACROSS stages —
-filters sink below joins, projections prune scans — exactly what a
-hand-written script of sequential `.cache()` steps would prevent.
+Every stage maps onto an already-verified operator and composes lazily,
+so Catalyst optimizes ACROSS stages — filters sink below joins,
+projections prune scans — exactly what a hand-written script of
+sequential `.cache()` steps would prevent. Three stages run Spark jobs
+while the pipeline is composed, because their output depends on a
+model fitted to the data:
+
+- `semantic_dedup`: the k-means sample collect, the pair-kernel collect
+  and an eager checkpoint of the drop set;
+- `dsir`: the n-gram model totals and an eager checkpoint of the
+  per-document weights;
+- `classifier_filter`: the training loop and the intercept lookup.
+
+Each materializes what it reads from its input once for all of its
+jobs — `semantic_dedup` the (id, vector) projection, `dsir` the raw
+corpus's n-gram buckets, `classifier_filter` the (id, text, label)
+projection — and releases it before returning; the frame it returns
+reads the upstream plan again when consumed. `dsir` also reads its
+target once; with `target_filter` that target is a filter of the same
+input. `semantic_dedup` returns its input anti-joined with the
+checkpointed drop set.
+
 Unknown stage names raise with the known list (config typos fail fast,
 not silently skip)."""
 
@@ -159,10 +177,15 @@ def _s_token_budget(df: DataFrame, group_cols: list, budgets, **kw) -> DataFrame
     return token_budget_sample(df, group_cols, budgets, **kw)
 
 
-def _s_semantic_dedup(df: DataFrame, **kw) -> DataFrame:
-    from ..operators.similarity import semantic_dedup
+def _s_semantic_dedup(df: DataFrame, id_col: str = "vec_id", **kw) -> DataFrame:
+    """semantic_dedup without its ``__cell`` column: the drop set (ids,
+    checkpointed) anti-joins onto the stage input, so no full row —
+    text included — crosses the Python boundary for a cell id the
+    stage would discard."""
+    from ..operators.similarity import _semantic_drops
 
-    return semantic_dedup(df, **kw).drop("__cell")
+    drops, _cent = _semantic_drops(df, id_col=id_col, **kw)
+    return df.join(drops, on=id_col, how="left_anti")
 
 
 def _s_dsir(

@@ -24,11 +24,13 @@ xxhash64 of (doc_id, position), no RNG state.
 
 from __future__ import annotations
 
+import os
 import resource
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 

@@ -10,10 +10,12 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import duckdb
 
@@ -54,8 +56,6 @@ def main():
 
     spark = get_spark(app_name="oracle-check")
     con = duckdb.connect()
-    import os
-
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.isdir(p):  # Spark-written dataset (directory of parts)

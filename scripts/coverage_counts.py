@@ -9,10 +9,12 @@ Usage: python scripts/coverage_counts.py          # print counts
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entry
 
@@ -40,7 +42,7 @@ def main() -> None:
     line = f"Declared contract: {n_q} queries, {n_o}/{n_q} with DuckDB oracle twins"
     print(line)
     if "--write" in sys.argv:
-        path = "/root/repo/COVERAGE.md"
+        path = os.path.join(ROOT, "COVERAGE.md")
         with open(path) as f:
             text = f.read()
         new, n = MARK.subn(line, text, count=1)

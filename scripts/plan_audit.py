@@ -14,10 +14,12 @@ so the document cannot drift from the code.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # query name -> why this plan shape is the one you want at scale
 AUDITED: dict[str, str] = {
@@ -308,7 +310,7 @@ def main() -> None:
         "also enforced by tests/test_plan_quality.py).",
         "",
     ]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write("\n".join(head) + "\n" + "\n".join(sections))
     print("wrote PLANS.md")
     assert totals["CartesianProduct"] == 0

@@ -13,12 +13,14 @@ Writes nothing outside /tmp; prints a markdown table for COVERAGE.md.
 
 from __future__ import annotations
 
+import os
 import shutil
 import sys
 import tempfile
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 

@@ -28,11 +28,13 @@ Exit code 0 = all assertions hold; prints a table for SCALE.md.
 from __future__ import annotations
 
 import hashlib
+import os
 import random
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1"
 RESULTS: list[tuple[str, str]] = []

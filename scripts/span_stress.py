@@ -13,11 +13,13 @@ Prints one JSON line per scenario; paste the table into SCALE.md.
 from __future__ import annotations
 
 import json
+import os
 import random
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F
 

@@ -28,3 +28,30 @@ def tmp_engine(spark, tmp_path):
     from etl_cli_spark.engine import Engine
 
     return Engine(spark, str(tmp_path))
+
+
+@pytest.fixture()
+def counted(spark):
+    """Put a frame behind a pass-through ``mapInPandas`` that adds each
+    batch's row count to an accumulator: ``counted(df)`` returns
+    ``(wrapped, acc)`` and ``acc.value`` is the number of input rows the
+    plans over ``wrapped`` have evaluated so far."""
+
+    def wrap(df):
+        acc = spark.sparkContext.accumulator(0)
+
+        def passthru(batches):
+            for pdf in batches:
+                acc.add(len(pdf))
+                yield pdf
+
+        return df.mapInPandas(passthru, df.schema), acc
+
+    return wrap
+
+
+@pytest.fixture()
+def persisted_rdds(spark):
+    """``persisted_rdds()`` -> ids of the RDDs the session currently
+    holds persisted."""
+    return lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())

@@ -33,6 +33,15 @@ def test_train_is_deterministic(docs):
     assert sorted(map(tuple, m1)) == sorted(map(tuple, m2))
 
 
+def test_train_evaluates_input_once(docs, counted):
+    """The label count, the feature pass and every iteration read one
+    materialized copy of the input."""
+    n = docs.count()
+    wrapped, acc = counted(docs)
+    train_linear_classifier(wrapped, _cnt("fast") > _cnt("slow"), iters=3, lr=400.0)
+    assert acc.value == n
+
+
 def test_model_artifact_shape(docs):
     label = _cnt("fast") > _cnt("slow")
     model = train_linear_classifier(docs, label, m_buckets=64, iters=2, lr=400.0)

@@ -182,6 +182,53 @@ def test_semantic_dedup_stage(engine):
     assert "__cell" not in out.columns
 
 
+def test_semantic_dedup_stage_reads_upstream_at_most_twice(engine, counted):
+    """Composing the stage (sample and pair-kernel collects) reads the
+    upstream once into one (id, vec) copy; consuming the result reads
+    it once more."""
+    emb = engine.read("embeddings")
+    n = emb.count()
+    wrapped, acc = counted(emb)
+    out = run_corpus_pipeline(
+        wrapped, [{"stage": "semantic_dedup", "n_clusters": 8, "threshold": 0.4}]
+    )
+    out.collect()
+    assert acc.value <= 2 * n
+
+
+def test_semantic_dedup_stage_plan_has_no_python_map(engine):
+    """The stage anti-joins the drop set onto its input: no full row
+    crosses the Python boundary for a cell id the stage drops."""
+    emb = engine.read("embeddings")
+    out = run_corpus_pipeline(
+        emb, [{"stage": "semantic_dedup", "n_clusters": 8, "threshold": 0.4}]
+    )
+    qe = out._jdf.queryExecution()
+    for plan in (qe.optimizedPlan().toString(), qe.executedPlan().toString()):
+        assert "MapInPandas" not in plan and "PythonMapInArrow" not in plan
+
+
+def _plan_rdd_ids(df) -> set[int]:
+    """Ids of the RDDs the frame's plan scans (``LogicalRDD`` leaves)."""
+    it = df._jdf.queryExecution().analyzed().collectLeaves().iterator()
+    ids = set()
+    while it.hasNext():
+        leaf = it.next()
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            ids.add(leaf.rdd().id())
+    return ids
+
+
+def test_semantic_dedup_stage_persists_only_its_drop_set(engine, persisted_rdds):
+    emb = engine.read("embeddings")
+    before = persisted_rdds()
+    out = run_corpus_pipeline(
+        emb, [{"stage": "semantic_dedup", "n_clusters": 8, "threshold": 0.4}]
+    )
+    new = persisted_rdds() - before
+    assert len(new) == 1 and new == _plan_rdd_ids(out)
+
+
 def test_dsir_stage(engine):
     from etl_cli_spark.operators.rank import dsir_select
     from etl_cli_spark.plans.corpus import run_corpus_pipeline

@@ -668,6 +668,71 @@ def test_training_shards_read_is_partition_pruned(spark, engine, tmp_path):
     assert df.select("shard").distinct().collect()[0].shard == 1
 
 
+def test_training_shards_evaluate_input_once(spark, engine, tmp_path, counted):
+    """The range-bounds sample, the write and the shard stats all read
+    one materialized copy, so every input row is evaluated once (three
+    times or more when each action re-runs the input plan)."""
+    from etl_cli_spark.operators.pipeline import write_training_shards
+
+    d = engine.read("documents")
+    n = d.count()
+    wrapped, acc = counted(d)
+    idx = write_training_shards(wrapped, str(tmp_path / "s"), budget=512, n_shards=4)
+    assert acc.value == n
+    assert sum(s["docs"] for s in idx["shards"].values()) == n
+
+
+def test_training_shards_release_their_copy_and_keep_callers_cache(
+    spark, engine, tmp_path, persisted_rdds
+):
+    from etl_cli_spark.operators.pipeline import write_training_shards
+
+    d = engine.read("documents")
+    before = persisted_rdds()
+    write_training_shards(d, str(tmp_path / "a"), budget=512, n_shards=4)
+    assert persisted_rdds() - before == set()
+    # an input the caller cached is read as is and stays cached
+    mine = d.select("doc_id", "lang", "text").persist()
+    try:
+        mine.count()
+        cached = persisted_rdds()
+        write_training_shards(
+            mine, str(tmp_path / "b"), budget=512, n_shards=4, columns=["lang"]
+        )
+        assert mine.storageLevel.useMemory
+        assert cached <= persisted_rdds()
+    finally:
+        mine.unpersist()
+
+
+def test_training_shards_index_replaced_atomically(spark, engine, tmp_path, monkeypatch):
+    """A crash while the index is being written leaves the previous
+    ``_shards.json`` whole (and no temp file behind)."""
+    import json
+    import os
+
+    from etl_cli_spark.operators.pipeline import (
+        read_training_shards,
+        write_training_shards,
+    )
+
+    d = engine.read("documents")
+    path = str(tmp_path / "shards")
+    first = write_training_shards(d, path, budget=512, n_shards=4)
+
+    def torn_dump(obj, f, **kw):
+        f.write('{"budget": ')
+        raise RuntimeError("injected crash mid-dump")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        write_training_shards(d, path, budget=256, n_shards=4)
+    monkeypatch.undo()
+    _, idx = read_training_shards(spark, path)
+    assert idx == first
+    assert sorted(os.listdir(path)) == ["_shards.json", "data"]
+
+
 def test_epoch_shuffle_total_order_without_global_sort(spark, engine):
     from etl_cli_spark.operators.pipeline import epoch_shuffle
 

@@ -274,6 +274,21 @@ def test_semantic_dedup_deterministic_and_keeps_cell(engine):
     assert semantic_dedup(emb, n_clusters=8, threshold=1.1).count() == emb.count()
 
 
+def test_semantic_dedup_keeps_a_callers_cache(engine, persisted_rdds):
+    from etl_cli_spark.operators.similarity import semantic_dedup
+
+    emb = engine.read("embeddings").persist()
+    try:
+        n = emb.count()
+        cached = persisted_rdds()
+        kept = semantic_dedup(emb, n_clusters=8, threshold=0.4)
+        assert emb.storageLevel.useMemory
+        assert cached <= persisted_rdds()
+        assert 0 < kept.count() <= n
+    finally:
+        emb.unpersist()
+
+
 # -- product quantization (round-5) -------------------------------------------
 
 

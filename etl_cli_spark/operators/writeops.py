@@ -35,6 +35,7 @@ import uuid
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ..dsl import compile_query
 from ..spec import TargetSpec
@@ -95,6 +96,71 @@ def _multiset_diff(old: DataFrame, new: DataFrame) -> tuple[DataFrame, DataFrame
         )
 
     return side(c_nc, c_oc), side(c_oc, c_nc)
+
+
+def _pk_changes(old: DataFrame, new: DataFrame, pk: list[str]) -> DataFrame:
+    """Delta-CDF-labelled row changes between two snapshots keyed by
+    ``pk``, in ONE shuffle exchange.
+
+    The tagged ``old ⊎ new`` union is hash-partitioned by ``pk`` once.
+    Everything after that is partition-local: the per-row old/new
+    counts group by ALL columns (a superset of ``pk``, so the pk
+    partitioning already satisfies the aggregate), and a
+    ``Window.partitionBy(pk)`` over the surviving (count-differing)
+    rows tells each row whether its key also has a removed image / an
+    added image. An added row whose key has a removed image is an
+    ``update_postimage``, otherwise an ``insert``; a removed row whose
+    key has no added image is a ``delete`` (the pre-image of an update
+    is not emitted). Multiplicity is restored with an explode of the
+    count difference — the same multiset semantics as ``exceptAll``.
+
+    A key with a null in any pk column never matches (equi-join
+    semantics), so such rows always come out as ``insert`` /
+    ``delete``. Helper columns are suffixed until absent from the
+    input schema, as in :func:`_multiset_diff`."""
+    cols = old.columns
+    names = ("o", "n", "oc", "nc", "ra", "aa", "k")
+    sfx = ""
+    while any(f"__{b}{sfx}" in cols for b in names):
+        sfx += "_"
+    c_o, c_n, c_oc, c_nc, c_ra, c_aa, c_k = (f"__{b}{sfx}" for b in names)
+    tagged = old.select(
+        *cols, F.lit(1).alias(c_o), F.lit(0).alias(c_n)
+    ).unionByName(new.select(*cols, F.lit(0).alias(c_o), F.lit(1).alias(c_n)))
+    counts = (
+        tagged.repartition(*[F.col(k) for k in pk])
+        .groupBy(*cols)
+        .agg(F.sum(c_o).alias(c_oc), F.sum(c_n).alias(c_nc))
+        .filter(F.col(c_oc) != F.col(c_nc))
+    )
+    added = F.col(c_nc) > F.col(c_oc)
+    keyed = F.lit(True)
+    for k in pk:
+        keyed = keyed & F.col(k).isNotNull()
+    w = Window.partitionBy(*pk)
+    flagged = counts.select(
+        *cols,
+        c_oc,
+        c_nc,
+        (keyed & F.max(~added).over(w)).alias(c_ra),
+        (keyed & F.max(added).over(w)).alias(c_aa),
+    )
+    return (
+        flagged.filter(added | ~F.col(c_aa))
+        .withColumn(
+            "change_type",
+            F.when(~added, F.lit("delete"))
+            .when(F.col(c_ra), F.lit("update_postimage"))
+            .otherwise(F.lit("insert")),
+        )
+        .withColumn(
+            c_k,
+            F.explode(
+                F.sequence(F.lit(1).cast("long"), F.abs(F.col(c_nc) - F.col(c_oc)))
+            ),
+        )
+        .select(*cols, "change_type")
+    )
 
 
 def bucket_expr(cols: tuple[str, ...] | list[str], n_buckets: int) -> Column:
@@ -430,7 +496,17 @@ class ParquetTable:
         dir, then move the data files into the live tree under
         transaction-unique names. The files are INVISIBLE to readers (no
         manifest references them yet); returns (relative paths, schema
-        json from the written footers — None if the write was empty)."""
+        json — None if the write was empty).
+
+        The schema is derived on the driver, never read back from the
+        staged footers: the writers store ``df``'s non-partition fields
+        in frame order and append the hive partition columns in
+        ``partitionBy`` order, so that is the table schema, each field
+        with ``df``'s own type (a read-back would re-infer partition
+        types from dir names, '007' -> int). The bucket writer's
+        ``__etl_bucket`` is a nullable int."""
+        from pyspark.sql.types import IntegerType, StructField, StructType
+
         # the _log must exist BEFORE any file lands in the live tree: a
         # crash mid-ingest on a table's FIRST write would otherwise
         # leave data files with no _log, and _is_manifest() would
@@ -443,34 +519,26 @@ class ParquetTable:
         if layout:
             self._write_bucketed(df, staged, layout, mode="overwrite")
             self._write_meta(*layout)
+            parts = [StructField(_BUCKET, IntegerType(), True)]
         elif vcols:
             self._write_value_partitioned(df, staged, vcols, mode="overwrite")
             self._write_value_meta(vcols)
+            parts = [df.schema[c] for c in vcols]
         else:
             self._writer(self._clustered(df)).mode("overwrite").parquet(staged)
             self._write_plain_meta()
+            parts = []
         has_data = any(
             not fn.startswith(("_", "."))
             for _r, _d, fns in os.walk(staged)
             for fn in fns
         )
+        schema = None
         if has_data:
-            staged_schema = (
-                self.spark.read.option("basePath", staged).parquet(staged).schema
-            )
-            # the staged read re-INFERS hive partition column types from
-            # dir names ('007' -> int, losing leading zeros); the input
-            # frame's types are the written truth — pin them wherever
-            # names match. Writer-added columns (__etl_bucket) keep
-            # their inferred (always-int) type.
-            from pyspark.sql.types import StructType as _ST
-
-            by_name = {f.name: f for f in df.schema.fields}
-            schema = _ST(
-                [by_name.get(f.name, f) for f in staged_schema.fields]
+            pnames = {f.name for f in parts}
+            schema = StructType(
+                [f for f in df.schema.fields if f.name not in pnames] + parts
             ).json()
-        else:
-            schema = None
         return self._ingest_staged(staged), schema
 
     def _ingest_staged(self, staged: str) -> list[str]:
@@ -880,17 +948,27 @@ class ParquetTable:
         the retained manifests (no per-write change capture needed —
         snapshots are immutable, so the diff IS the change set).
 
-        Without ``pk``: multiset semantics via two ``exceptAll`` —
-        ``change_type`` is ``insert`` / ``delete``. With ``pk``: rows
-        whose key exists on both sides classify as ``update_postimage``
+        Without ``pk``: multiset semantics of two ``exceptAll`` (one
+        shared aggregation, :func:`_multiset_diff`) — ``change_type``
+        is ``insert`` / ``delete``. With ``pk``: an added row whose key
+        also has a removed image classifies as ``update_postimage``
         (new image emitted), the rest as ``insert`` / ``delete`` —
-        Delta-CDF-style labels. ``commit_version`` carries the target
-        snapshot.
+        Delta-CDF-style labels; a key with a null pk column never
+        matches, as in an equi-join. ``commit_version`` carries the
+        target snapshot.
+
+        The pk plan has ONE shuffle exchange and no broadcast
+        (:func:`_pk_changes`): the tagged old ⊎ new union is
+        hash-partitioned by ``pk``, the old/new counts group by all
+        columns inside those partitions, a ``Window.partitionBy(pk)``
+        marks which keys have a removed / an added image, and each
+        count-differing row is classified and exploded back to its
+        multiplicity — one map-stage job plus the consuming action's.
 
         Scale: the diff never scans the full snapshots. Data files are
         immutable (transaction-unique names, never rewritten in place),
         so a file listed by BOTH manifests contributes the identical
-        row multiset to both sides of the ``exceptAll`` and cancels:
+        row multiset to both sides of the diff and cancels:
         ``(A ⊎ S) −ₘ (B ⊎ S) = A −ₘ B``. The manifests already list
         each snapshot's complete file set, so both sides are pruned to
         the manifests' symmetric difference before Spark builds a file
@@ -925,31 +1003,15 @@ class ParquetTable:
             old = old.drop(_BUCKET)
         if _BUCKET in new.columns:
             new = new.drop(_BUCKET)
-        added, removed = _multiset_diff(old, new)
-        if not pk:
-            out = added.withColumn("change_type", F.lit("insert")).unionByName(
-                removed.withColumn("change_type", F.lit("delete"))
+        if pk:
+            return _pk_changes(old, new, list(pk)).withColumn(
+                "commit_version", F.lit(int(to_version))
             )
-            return out.withColumn("commit_version", F.lit(int(to_version)))
-        pk = list(pk)
-        old_keys = removed.select(*pk)
-        new_keys = added.select(*pk)
-        ins = added.join(old_keys, on=pk, how="left_anti").withColumn(
-            "change_type", F.lit("insert")
+        added, removed = _multiset_diff(old, new)
+        out = added.withColumn("change_type", F.lit("insert")).unionByName(
+            removed.withColumn("change_type", F.lit("delete"))
         )
-        # deltas are usually small; AQE picks broadcast when they are,
-        # and a full-rewrite-sized delta still hash-joins safely
-        upd = added.join(old_keys.distinct(), on=pk, how="left_semi").withColumn(
-            "change_type", F.lit("update_postimage")
-        )
-        del_ = removed.join(new_keys, on=pk, how="left_anti").withColumn(
-            "change_type", F.lit("delete")
-        )
-        return (
-            ins.unionByName(upd)
-            .unionByName(del_)
-            .withColumn("commit_version", F.lit(int(to_version)))
-        )
+        return out.withColumn("commit_version", F.lit(int(to_version)))
 
     def read_buckets(self, buckets: list[int]) -> DataFrame:
         """Partition-pruned read: only the named bucket directories are
@@ -1590,12 +1652,15 @@ def apply_write_op(src: DataFrame, table: ParquetTable, spec: TargetSpec) -> Dat
         else:
             tgt = table.read()
         if tgt is None:
-            new_rows = src
-        else:
-            # persist: the anti-join and the append both evaluate src
-            from pyspark import StorageLevel
+            if spec.dry_run:
+                return src
+            table.append(src)
+            return table.read()
+        # persist: the anti-join and the append both evaluate src
+        from pyspark import StorageLevel
 
-            src = src.persist(StorageLevel.MEMORY_AND_DISK)
+        src = src.persist(StorageLevel.MEMORY_AND_DISK)
+        try:
             if src.count() <= _BROADCAST_SRC_ROWS:
                 # broadcast-structured: hit keys from a semi join that
                 # streams the target (no target-side Exchange), then a
@@ -1609,12 +1674,13 @@ def apply_write_op(src: DataFrame, table: ParquetTable, spec: TargetSpec) -> Dat
                 new_rows = src.join(
                     tgt.select(*keys).dropDuplicates(keys), on=keys, how="left_anti"
                 )
-        if spec.dry_run:
-            return new_rows  # plan still references src; caller owns its lifetime
-        table.append(new_rows)
-        if tgt is not None:
-            src.unpersist()
-        return table.read()
+            if spec.dry_run:
+                return new_rows  # plan still references src; caller owns its lifetime
+            table.append(new_rows)
+            return table.read()
+        finally:
+            if not spec.dry_run:
+                src.unpersist()
 
     if not spec.pk:
         raise ValueError(f"op {op!r} requires a pk")
@@ -1627,18 +1693,19 @@ def apply_write_op(src: DataFrame, table: ParquetTable, spec: TargetSpec) -> Dat
     from pyspark import StorageLevel
 
     src = src.persist(StorageLevel.MEMORY_AND_DISK)
-    # broadcast-structured MERGE (round-4 judge item #3): when the
-    # changed-rows set is small — the normal MERGE shape — every join
-    # against the target is structured so the TARGET side never
-    # exchanges: the matched join broadcasts the source, and the
-    # new-keys anti-join runs source-vs-hit-keys (both source-sized,
-    # broadcast) instead of source-vs-target-keys (which hash-shuffled
-    # the pruned target). The count is a cheap job on the already-
-    # persisted source; above the threshold the classic shuffle plan is
-    # the right one and nothing changes.
-    n_src = src.count()
-    small_src = n_src <= _BROADCAST_SRC_ROWS
+    try:
+        return _merge(src, table, spec)
+    finally:
+        # release on EVERY exit — a no-op delete, a raising commit — but
+        # a dry run returns a plan over src: the caller owns its lifetime
+        if not spec.dry_run:
+            src.unpersist()
 
+
+def _merge(src: DataFrame, table: ParquetTable, spec: TargetSpec) -> DataFrame:
+    """The update family (update/upsert/index/delete) over the persisted,
+    pk-deduped source; :func:`apply_write_op` owns ``src``'s lifetime."""
+    op, pk = spec.op, list(spec.pk)
     # partition-scoped paths: when the table is bucketed exactly by this
     # pk — or value-partitioned on a column CONTAINED in the pk (the row
     # can then never change partition) — restrict BOTH the target read
@@ -1654,10 +1721,29 @@ def apply_write_op(src: DataFrame, table: ParquetTable, spec: TargetSpec) -> Dat
         and vlayout[0] in spec.pk
         and vlayout[0] in src.columns
     )
+    # broadcast-structured MERGE (round-4 judge item #3): when the
+    # changed-rows set is small — the normal MERGE shape — every join
+    # against the target is structured so the TARGET side never
+    # exchanges: the matched join broadcasts the source, and the
+    # new-keys anti-join runs source-vs-hit-keys (both source-sized,
+    # broadcast) instead of source-vs-target-keys (which hash-shuffled
+    # the pruned target). The count is a cheap job on the already-
+    # persisted source; above the threshold the classic shuffle plan is
+    # the right one and nothing changes. A pk-bucketed table takes the
+    # touched bucket ids from the same aggregate (a list bounded by
+    # n_buckets): one pass over the cached source, not two.
     touched: list[int] = []
     touched_vals: list | None = None
     if scoped:
-        touched = _touched_buckets(src, layout)
+        row = src.agg(
+            F.count(F.lit(1)), F.collect_set(bucket_expr(*layout))
+        ).first()
+        n_src, touched = row[0], sorted(row[1])
+    else:
+        n_src = src.count()
+    small_src = n_src <= _BROADCAST_SRC_ROWS
+
+    if scoped:
         tgt = table.read_buckets(touched) if touched else table.read().limit(0)
     elif vscoped:
         touched_vals = _touched_values(src, vlayout[0])
@@ -1684,7 +1770,6 @@ def apply_write_op(src: DataFrame, table: ParquetTable, spec: TargetSpec) -> Dat
                 if table._target_layout() or table._target_value_layout()
                 else _sized_seed(src)
             )
-            src.unpersist()
             return table.read()
         # update/delete against a missing target is a no-op
         return src.limit(0)
@@ -1778,5 +1863,4 @@ def apply_write_op(src: DataFrame, table: ParquetTable, spec: TargetSpec) -> Dat
         # plain-layout full rewrite: size the output files (the bucketed
         # and value-partitioned writers repartition by layout already)
         table.overwrite(_sized_rewrite(new_state, table, src=src))
-    src.unpersist()
     return table.read()

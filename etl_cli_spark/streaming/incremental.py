@@ -264,13 +264,15 @@ def changefeed_merge(
             gone = changes.filter(F.col("change_type") == "delete").select(*pk)
             if transform is not None:
                 post = transform(post)
-            # ONE job for both counts (round-15, guide §1 job-count
+            # ONE action for both counts (round-15, guide §1 job-count
             # reduction): post and gone are narrow filters of the same
-            # cached diff, but two .count() actions scheduled two
-            # separate jobs per run. Project each side to a tag literal
-            # and aggregate the union — same numbers (the post side
-            # counts AFTER ``transform``, which may filter), half the
-            # count jobs per drain.
+            # cached diff, so project each side to a tag literal and
+            # aggregate the union — same numbers (the post side counts
+            # AFTER ``transform``, which may filter). This action also
+            # materializes the cache, so it carries the diff's cost —
+            # for the pk diff a single shuffle exchange (see
+            # ``_pk_changes``) — and the upsert and delete below only
+            # scan the cache.
             tallies = (
                 post.select(F.lit(1).alias("__post"))
                 .unionByName(gone.select(F.lit(0).alias("__post")))

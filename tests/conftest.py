@@ -1,6 +1,8 @@
 from __future__ import annotations
 
 import os
+import uuid
+from contextlib import contextmanager
 
 import pytest
 
@@ -55,3 +57,24 @@ def persisted_rdds(spark):
     """``persisted_rdds()`` -> ids of the RDDs the session currently
     holds persisted."""
     return lambda: set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``with spark_jobs() as jobs: ...`` runs the block under a unique
+    job group; on exit ``jobs`` holds the ids of the Spark jobs the
+    block ran (``statusTracker().getJobIdsForGroup``)."""
+    sc = spark.sparkContext
+
+    @contextmanager
+    def run():
+        group = f"test-{uuid.uuid4().hex}"
+        jobs: list[int] = []
+        sc.setJobGroup(group, group)
+        try:
+            yield jobs
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            jobs.extend(sorted(sc.statusTracker().getJobIdsForGroup(group)))
+
+    return run
